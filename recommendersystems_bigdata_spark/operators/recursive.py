@@ -192,7 +192,7 @@ def q_rec_path_to_root(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders
     ),
     spine(m) AS (
-      SELECT lo FROM bounds
+      SELECT lo FROM bounds WHERE lo IS NOT NULL
       UNION ALL
       SELECT m + INTERVAL 1 MONTH FROM spine, bounds WHERE m < hi
     ),
@@ -236,7 +236,11 @@ def q_rec_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated groupBy plus ONE min/max pass for the bounds,
     materialized FIRST with a 1-row localCheckpoint (an inline bounds
     subquery would re-scan orders under the generate). The
-    spine⋈aggregate join is |months| vs |months| rows."""
+    spine⋈aggregate join is |months| vs |months| rows.
+
+    Empty input: an empty ``orders`` gives NULL bounds, and both the engine
+    and the oracle drop a NULL ``lo`` before the spine, so each emits 0
+    rows (not one NULL month)."""
     register_views(spark, sf_dir)
     bounds = spark.sql(
         """
@@ -250,7 +254,7 @@ def q_rec_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
         WITH spine AS (
           SELECT explode(sequence(lo, hi, interval 1 month)) AS m
-          FROM spine_bounds
+          FROM spine_bounds WHERE lo IS NOT NULL
         ),
         per_month AS (
           SELECT date_trunc('MONTH', CAST(o_orderdate AS TIMESTAMP)) AS m,

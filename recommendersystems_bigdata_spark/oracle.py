@@ -147,6 +147,11 @@ def compare_frames(key: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) 
     if not (res.rowcount_match and res.schema_match):
         return res
 
+    if len(spark_pdf) == 0:
+        # Both empty with matching schemas: nothing to differ. (``equals``
+        # would compare the empty frames' dtypes and index types instead.)
+        res.value_match = True
+        return res
     cs, co = canonicalize(spark_pdf), canonicalize(oracle_pdf)
     eq = cs.equals(co)
     res.value_match = eq
@@ -157,8 +162,9 @@ def compare_frames(key: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) 
             {c: (cs.loc[i, c], co.loc[i, c]) for c in cs.columns if cs.loc[i, c] != co.loc[i, c]}
             for i in bad
         ]
-        # classify: is every diff a float within 1e-6 relative?
-        noise = True
+        # classify: is every diff a float within 1e-6 relative? An empty
+        # sample shows no diff at all, so it is never float noise.
+        noise = bool(res.diff_sample)
         for d in res.diff_sample:
             for a, b in d.values():
                 try:

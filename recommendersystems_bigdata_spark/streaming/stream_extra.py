@@ -18,6 +18,7 @@ from recommendersystems_bigdata_spark.registry import query
 from recommendersystems_bigdata_spark.streaming.stream_queries import (
     read_events_stream,
     run_to_memory,
+    stream_state_partitions,
 )
 
 
@@ -82,7 +83,7 @@ def q_stream_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("w_start"), "event_type", "n_events")
     )
-    drained = run_to_memory(agg, "append")
+    drained = run_to_memory(agg, "append", stream_state_partitions(spark, sf_dir))
     rk = F.row_number().over(
         Window.partitionBy("w_start").orderBy(
             F.col("n_events").desc(), "event_type"

@@ -36,6 +36,7 @@ from recommendersystems_bigdata_spark.registry import query
 from recommendersystems_bigdata_spark.streaming.stream_queries import (
     read_events_stream,
     run_to_memory,
+    stream_state_partitions,
 )
 
 
@@ -120,7 +121,11 @@ def q_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 1 HOUR")),
         "left_outer",
     )
-    return run_to_memory(joined.select("l_id", "l_user", "r_id"), "append")
+    return run_to_memory(
+        joined.select("l_id", "l_user", "r_id"),
+        "append",
+        stream_state_partitions(spark, sf_dir),
+    )
 
 
 @query(
@@ -158,4 +163,4 @@ def q_stream_dedup_within_watermark(
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    return run_to_memory(deduped, "append")
+    return run_to_memory(deduped, "append", stream_state_partitions(spark, sf_dir))

@@ -22,6 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from recommendersystems_bigdata_spark.tmpdirs import scratch_dir
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -44,30 +45,27 @@ _STREAM_SRC: dict[str, tuple[str, StructType]] = {}
 N_STREAM_CHUNKS = 4
 
 # Scale-adaptive state-partition count for the availableNow drains
-# (round 12, guide §2.2 — partitions ∝ bytes, never a constant tuned to
-# one machine). A stateful streaming operator claims ONE state store per
-# shuffle partition per micro-batch, and the default HDFS-backed provider
-# writes + fsyncs a delta file per store per batch, so the per-batch fixed
-# cost is linear in `spark.sql.shuffle.partitions` REGARDLESS of data —
-# measured at sf0.1 (scripts/stream_profile.py): state-store commit time
-# dominates addBatch while total state is 40–50k rows, and a default
-# 200-partition session pays 200 store commits × batches × (up to 4
-# stores for a stream-stream join) to manage kilobytes. The drain
-# therefore sizes state partitions from the bytes that will actually
-# stream through: total chunked-source bytes / 32 MB, floored at 8 —
-# growing without bound as the corpus grows (at 100 TB the derived count
-# exceeds any session default and the session value governs via the
-# min() in run_to_memory), env-overridable for deployments that know
-# their state cardinality. Partition COUNT is invisible to results:
-# rows hash to stores by key, and within-key arrival order (which
-# decides keep-first dedup) rides the per-batch single-file map order,
-# not the reducer count — pinned by the oracle/hash checks either way.
+# (partitions ∝ bytes, never a constant tuned to one machine). A stateful
+# streaming operator claims ONE state store per shuffle partition per
+# micro-batch, and the default HDFS-backed provider writes + fsyncs a delta
+# file per store per batch, so the per-batch fixed cost is linear in the
+# partition count REGARDLESS of data. Measured at sf0.1
+# (scripts/stream_profile.py): state-store commit time dominates addBatch
+# while total state is 40–50k rows, and a default 200-partition session pays
+# 200 store commits × batches × (up to 4 stores for a stream-stream join) to
+# manage kilobytes. stream_state_partitions() therefore sizes state
+# partitions from the bytes that will actually stream through: chunked-source
+# bytes / 32 MB, at least 1 (every shipped corpus derives 1), growing without
+# bound with the corpus. Each query passes that count to run_to_memory, which
+# drains under min(session shuffle partitions, count): the session value
+# caps it, and so caps the STREAM_SHUFFLE_ENV override as well — the env var
+# can lower the state-partition count below the session's, never raise it
+# above. Partition COUNT is invisible to results: rows hash to stores by
+# key, and within-key arrival order (which decides keep-first dedup) rides
+# the per-batch single-file map order, not the reducer count — pinned by
+# the oracle/hash checks either way.
 STREAM_SHUFFLE_ENV = "SPARK_GRAFT_STREAM_SHUFFLE"
 _STREAM_STATE_BYTES_PER_PARTITION = 32 * 1024 * 1024
-# Set by read_events_stream to the partition count derived for the source
-# it just prepared; consumed by run_to_memory (drains are synchronous and
-# single-threaded, so "the last source prepared" is the one draining).
-_LAST_STREAM_PARTITIONS: list[int] = [0]
 
 
 def _chunked_events_dir(spark: SparkSession, sf_dir: str) -> tuple[str, StructType]:
@@ -139,16 +137,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twins.
     """
     src, schema = _chunked_events_dir(spark, sf_dir)
-    env = os.environ.get(STREAM_SHUFFLE_ENV)
-    if env:
-        _LAST_STREAM_PARTITIONS[0] = int(env)
-    else:
-        total_bytes = sum(
-            os.path.getsize(p) for p in _glob.glob(os.path.join(src, "part-*"))
-        )
-        _LAST_STREAM_PARTITIONS[0] = max(
-            8, -(-total_bytes // _STREAM_STATE_BYTES_PER_PARTITION)
-        )
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -157,23 +145,35 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
-    """Drain a stream into a memory sink with availableNow; return the result.
+def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
+    """State-partition count for draining the events stream of ``sf_dir``:
+    the STREAM_SHUFFLE_ENV override, else ceil(chunked-source bytes / 32 MB),
+    at least 1 (see the note above STREAM_SHUFFLE_ENV)."""
+    env = os.environ.get(STREAM_SHUFFLE_ENV)
+    if env:
+        return int(env)
+    src, _schema = _chunked_events_dir(spark, sf_dir)
+    total_bytes = sum(os.path.getsize(p) for p in _glob.glob(os.path.join(src, "part-*")))
+    return max(1, -(-total_bytes // _STREAM_STATE_BYTES_PER_PARTITION))
+
+
+def drain_to_memory(stream_df: DataFrame, output_mode: str, partitions: int) -> StreamingQuery:
+    """Drain a stream into a memory sink with availableNow; return the
+    finished query (its ``name`` is the sink's table).
 
     State partitioning: `spark.sql.shuffle.partitions` is captured by a
     streaming query at start and becomes its state-store partition count
-    for life, so the drain starts under min(session value, the
-    scale-derived count from read_events_stream) and restores the session
-    conf immediately after — never raising it above what the session
-    chose, only refusing to spread kilobytes of state over hundreds of
-    per-batch store commits (see STREAM_SHUFFLE_ENV note above)."""
+    for life, so the drain starts under min(session value, ``partitions``
+    — normally stream_state_partitions()) and restores the session conf
+    immediately after: never raising it above what the session chose, only
+    refusing to spread kilobytes of state over hundreds of per-batch store
+    commits (see the STREAM_SHUFFLE_ENV note above)."""
     spark = stream_df.sparkSession
     name = "mem_" + uuid.uuid4().hex[:12]
     ckpt = scratch_dir("ckpt_" + name)
     conf_key = "spark.sql.shuffle.partitions"
     session_n = int(spark.conf.get(conf_key))
-    derived = _LAST_STREAM_PARTITIONS[0]
-    n = min(session_n, derived) if derived else session_n
+    n = min(session_n, partitions)
     if n != session_n:
         spark.conf.set(conf_key, str(n))
     try:
@@ -189,7 +189,13 @@ def run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     finally:
         if n != session_n:
             spark.conf.set(conf_key, str(session_n))
-    return spark.table(name)
+    return q
+
+
+def run_to_memory(stream_df: DataFrame, output_mode: str, partitions: int) -> DataFrame:
+    """Drain a stream into a memory sink (drain_to_memory); return the result."""
+    q = drain_to_memory(stream_df, output_mode, partitions)
+    return stream_df.sparkSession.table(q.name)
 
 
 @query(
@@ -224,7 +230,7 @@ def q_stream_watermark_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("w_start"), "event_type", "n_events", "total_value")
     )
-    return run_to_memory(agg, "append")
+    return run_to_memory(agg, "append", stream_state_partitions(spark, sf_dir))
 
 
 @query(
@@ -254,7 +260,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    return run_to_memory(agg, "complete")
+    return run_to_memory(agg, "complete", stream_state_partitions(spark, sf_dir))
 
 
 @query(
@@ -310,7 +316,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inner",
     )
     pairs = joined.select("l_id", "l_user", "r_id")
-    return run_to_memory(pairs, "append")
+    return run_to_memory(pairs, "append", stream_state_partitions(spark, sf_dir))
 
 
 @query("q_stream_foreach_batch_sink")
@@ -401,7 +407,7 @@ def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_to_memory(counted, "update")
+    return run_to_memory(counted, "update", stream_state_partitions(spark, sf_dir))
 
 
 @query(
@@ -460,4 +466,4 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return run_to_memory(agg, "append")
+    return run_to_memory(agg, "append", stream_state_partitions(spark, sf_dir))

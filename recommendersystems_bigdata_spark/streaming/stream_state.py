@@ -35,6 +35,7 @@ from recommendersystems_bigdata_spark.registry import query
 from recommendersystems_bigdata_spark.streaming.stream_queries import (
     read_events_stream,
     run_to_memory,
+    stream_state_partitions,
 )
 
 _EVERY_N = 10
@@ -170,7 +171,7 @@ def q_stream_tws_milestones(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
 
-    drained = run_to_memory(milestones, "append")
+    drained = run_to_memory(milestones, "append", stream_state_partitions(spark, sf_dir))
     return drained.select("user_id", "milestone_n", "ts").orderBy(
         "user_id", "milestone_n"
     )

@@ -1,14 +1,14 @@
 """Per-trigger profile of the streaming keys (round-12 verdict item 7).
 
-For each streaming query key, monkeypatches ``run_to_memory`` /
-``run_update_stream`` so the StreamingQuery handle is captured, then
-records every micro-batch's progress metrics: batch id, input rows,
-``durationMs`` breakdown (addBatch = plan execution, walCommit /
-commitOffsets = offset+commit log fsyncs, getBatch / latestOffset =
-source bookkeeping) and state-store metrics where present. The question
-it answers: is a streaming key's wall time trigger-count × fixed
-micro-batch machinery (nothing a query-plan change can remove without
-changing the declared output) or actual plan waste inside addBatch?
+For each streaming query key, monkeypatches ``run_to_memory`` so the
+StreamingQuery handle is captured, then records every micro-batch's
+progress metrics: batch id, input rows, ``durationMs`` breakdown
+(addBatch = plan execution, walCommit / commitOffsets = offset+commit log
+fsyncs, getBatch / latestOffset = source bookkeeping) and state-store
+metrics where present. The question it answers: is a streaming key's wall
+time trigger-count × fixed micro-batch machinery (nothing a query-plan
+change can remove without changing the declared output) or actual plan
+waste inside addBatch?
 
 Usage:
     cd /tmp && python /root/repo/scripts/stream_profile.py OUT.json [KEY ...]
@@ -51,46 +51,29 @@ def main() -> None:
 
     captured: list[dict] = []
 
-    def _wrap(orig):
-        def run(stream_df, output_mode):
-            import uuid
-
-            from recommendersystems_bigdata_spark.tmpdirs import scratch_dir
-
-            name = "mem_" + uuid.uuid4().hex[:12]
-            ckpt = scratch_dir("ckpt_" + name)
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+    def run(stream_df, output_mode, partitions):
+        q = stream_queries.drain_to_memory(stream_df, output_mode, partitions)
+        for p in q.recentProgress:
+            captured.append(
+                {
+                    "batchId": p["batchId"],
+                    "numInputRows": p.get("numInputRows"),
+                    "durationMs": p.get("durationMs"),
+                    "stateOperators": [
+                        {
+                            k: so.get(k)
+                            for k in (
+                                "operatorName",
+                                "commitTimeMs",
+                                "numRowsTotal",
+                                "numRowsUpdated",
+                            )
+                        }
+                        for so in p.get("stateOperators", [])
+                    ],
+                }
             )
-            q.awaitTermination()
-            for p in q.recentProgress:
-                captured.append(
-                    {
-                        "batchId": p["batchId"],
-                        "numInputRows": p.get("numInputRows"),
-                        "durationMs": p.get("durationMs"),
-                        "stateOperators": [
-                            {
-                                k: so.get(k)
-                                for k in (
-                                    "operatorName",
-                                    "commitTimeMs",
-                                    "numRowsTotal",
-                                    "numRowsUpdated",
-                                )
-                            }
-                            for so in p.get("stateOperators", [])
-                        ],
-                    }
-                )
-            return stream_df.sparkSession.table(name)
-
-        return run
+        return stream_df.sparkSession.table(q.name)
 
     spark = get_spark(app_name="stream_profile")
     spark.sparkContext.setLogLevel("ERROR")
@@ -100,10 +83,9 @@ def main() -> None:
     # `from X import run_to_memory` binds the name per consumer module, so
     # patch every package module that holds a binding.
     pkg = "recommendersystems_bigdata_spark"
-    wrapped = _wrap(None)
     for mod_name, mod in list(sys.modules.items()):
         if mod_name.startswith(pkg) and getattr(mod, "run_to_memory", None):
-            mod.run_to_memory = wrapped
+            mod.run_to_memory = run
 
     results: dict[str, dict] = {}
     for key in keys:

@@ -8,9 +8,13 @@ happened to agree with an equally-wrong oracle spelling still fails.
 from __future__ import annotations
 
 import math
+import os
+
+import pyarrow.parquet as pq
 
 from recommendersystems_bigdata_spark import registry
-from recommendersystems_bigdata_spark.catalog import load_table
+from recommendersystems_bigdata_spark.catalog import TABLES, load_table
+from recommendersystems_bigdata_spark.oracle import compare_frames, duckdb_connection
 
 registry.load_all()
 
@@ -109,3 +113,23 @@ def test_month_spine_covers_full_range_with_gaps_flagged(spark, sf_dir):
     for r, ym in zip(rows, spine):
         assert r["n_orders"] == counts.get(ym, 0)
         assert r["is_gap"] == (0 if ym in counts else 1)
+
+
+def test_month_spine_empty_orders_emits_no_rows(spark, sf_dir, tmp_path):
+    """An empty ``orders`` has NULL month bounds: engine and oracle both
+    emit 0 rows, not one NULL month."""
+    corpus = str(tmp_path)
+    for t in TABLES:
+        if t != "orders":
+            os.symlink(os.path.abspath(f"{sf_dir}/{t}.parquet"), f"{corpus}/{t}.parquet")
+    schema = pq.read_schema(f"{sf_dir}/orders.parquet")
+    pq.write_table(schema.empty_table(), f"{corpus}/orders.parquet")
+    got = registry.QUERIES["q_rec_month_spine"](spark, corpus).toPandas()
+    con = duckdb_connection(corpus)
+    try:
+        want = con.execute(registry.ORACLES["q_rec_month_spine"]).df()
+    finally:
+        con.close()
+    assert len(got) == 0 and len(want) == 0
+    res = compare_frames("q_rec_month_spine", got, want)
+    assert res.ok, res.message()
