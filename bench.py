@@ -23,14 +23,13 @@ field. With 16+ headline queries that pushed the single JSON line past
 bench stdout — BENCH_r09.json and BENCH_r10.json both show the line
 truncated mid-stream and ``"parsed": null``, i.e. the driver got NO
 bench numbers for two rounds. The printed line now carries only the
-contracted fields (metric/value/unit/queries/sf) plus the compact
-round-over-round subtotals, and the raw series go to a sidecar file
-(``$SPARK_GRAFT_BENCH_RUNS_PATH``, default ``BENCH_LOCAL_runs.json``
-next to this script) instead of stdout. ``tests/test_bench_contract.py``
-pins the printed-line budget so headline growth can't silently re-break
-the driver's parse. Timing methodology (noop sink, 1 warm-up + 3 timed
-series, medians) is UNCHANGED — the old ``value``/``queries`` numbers
-remain directly comparable.
+contracted fields (metric/value/unit/queries/sf), and the raw series go
+to a sidecar file (``$SPARK_GRAFT_BENCH_RUNS_PATH``, default
+``BENCH_LOCAL_runs.json`` next to this script) instead of stdout.
+``tests/test_bench_contract.py`` pins the printed-line budget so headline
+growth can't silently re-break the driver's parse. Timing methodology
+(noop sink, 1 warm-up + 3 timed series, medians) is UNCHANGED — the old
+``value``/``queries`` numbers remain directly comparable.
 """
 
 from __future__ import annotations
@@ -119,6 +118,17 @@ def _time_once(fn, spark, sf_dir: str) -> float:
     return time.perf_counter() - t0
 
 
+def _payload(medians: dict[str, float], sf: float | None) -> dict:
+    """The printed line: only the contracted fields (see module doc)."""
+    return {
+        "metric": "headline_wall_sec",
+        "value": round(sum(medians.values()), 3),
+        "unit": "sec",
+        "queries": medians,
+        "sf": sf,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -145,47 +155,7 @@ def main() -> None:
         name: round(statistics.median(r[name] for r in runs), 3) for name in HEADLINE
     }
 
-    # r1-r3 benched only the first 7 queries; the LLM-surface ops were added
-    # in round 4, the iterative q_dedup_clusters in round 7, the sequence
-    # signature early in round 9, the FIFO interval join late in round 9
-    # and the distributed-rank concentration curve at round-9 end. The
-    # subtotals keep round-over-round comparisons honest without
-    # changing the contracted top-level fields: compare r3_comparable_7q_sec
-    # across all rounds, r6_comparable_10q_sec against BENCH_r0{5,6}.json's
-    # "value", r8_comparable_11q_sec against BENCH_r0{7,8}.json's "value",
-    # r9_comparable_13q_sec / r9_comparable_14q_sec against
-    # BENCH_LOCAL_r09.json's earlier "value" columns (the embedding-fold
-    # q_emb_norm_audit joined 15th at round-9 end), and "value" itself
-    # only from round 10 on.
-    legacy_7q = round(sum(medians[n] for n in HEADLINE[:7]), 3)
-    legacy_10q = round(sum(medians[n] for n in HEADLINE[:10]), 3)
-    legacy_11q = round(sum(medians[n] for n in HEADLINE[:11]), 3)
-    legacy_12q = round(sum(medians[n] for n in HEADLINE[:12]), 3)
-    legacy_13q = round(sum(medians[n] for n in HEADLINE[:13]), 3)
-    legacy_14q = round(sum(medians[n] for n in HEADLINE[:14]), 3)
-    # round 10 added the 16th headline (q_fingerprint_by_month): compare
-    # r9_comparable_15q_sec against BENCH_r09.json's "value"; "value"
-    # itself is comparable from round 10 on.
-    legacy_15q = round(sum(medians[n] for n in HEADLINE[:15]), 3)
-    # round 11 added the 17th..19th headlines (survival/search/bigram):
-    # compare r10_comparable_16q_sec against BENCH_r10.json's "value";
-    # "value" itself is comparable from round 11 on.
-    legacy_16q = round(sum(medians[n] for n in HEADLINE[:16]), 3)
-    payload = {
-        "metric": "headline_wall_sec",
-        "value": round(sum(medians.values()), 3),
-        "unit": "sec",
-        "queries": medians,
-        "sf": sf,
-        "r3_comparable_7q_sec": legacy_7q,
-        "r6_comparable_10q_sec": legacy_10q,
-        "r8_comparable_11q_sec": legacy_11q,
-        "r9_comparable_12q_sec": legacy_12q,
-        "r9_comparable_13q_sec": legacy_13q,
-        "r9_comparable_14q_sec": legacy_14q,
-        "r9_comparable_15q_sec": legacy_15q,
-        "r10_comparable_16q_sec": legacy_16q,
-    }
+    payload = _payload(medians, sf)
     # Raw series to the sidecar (never stdout — see the module-doc note on
     # the driver's bounded tail capture).
     runs_path = os.environ.get(

@@ -1,22 +1,18 @@
-"""Pre-verify the driver's CORRECTNESS sample for the current round.
+"""Pre-verify the driver's CORRECTNESS sample.
 
 The round driver imports ``__spark_entry__`` with its own DEFAULT
 SparkSession and samples the FIRST 50 registered keys (registration order
-rotates per round — see ``registry._module_order``). This script reproduces
-that exact harness: default session, first-50 keys in registration order,
+is ``registry._QUERY_MODULES``). This script reproduces that exact
+harness: default session, first-N keys in registration order,
 sf0.01, DuckDB oracle compare where an oracle exists, rows-only otherwise —
 and additionally records a sha256 of the canonicalized Spark result for
 every key so two runs in SEPARATE JVM processes can be diffed for
 cross-session determinism (ALS factor init, KMeans seeding, Arrow batch
 boundaries are the suspects).
 
-Usage:
-    cd /tmp && python /root/repo/scripts/presample_verify.py OUT.json [SF_DIR] [N_KEYS] [ROUND]
-
-ROUND (optional) simulates a FUTURE round's registration order — the keys are
-re-ordered per ``registry._module_order(ROUND)`` (reconstructed from each
-query function's module, as tests/test_registry_rotation.py does) so a later
-round's sample window can be pre-verified before the driver reaches it.
+Usage (from a directory outside the repo, so Python workers cannot pick
+up a stray cwd import):
+    python <repo>/scripts/presample_verify.py OUT.json [SF_DIR] [N_KEYS]
 
 Exit code 0 iff every oracle compare passes (rows-only keys just need to run).
 """
@@ -30,24 +26,10 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 
-def _keys_for_round(rnd: int) -> list[str]:
-    import importlib
-
-    from recommendersystems_bigdata_spark import registry
-
-    registry.load_all()
-    keys: list[str] = []
-    for mod in registry._module_order(rnd):
-        importlib.import_module(mod)
-        keys.extend(k for k, fn in registry.QUERIES.items() if fn.__module__ == mod)
-    return keys
-
-
 def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/presample.json"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     n_keys = int(sys.argv[3]) if len(sys.argv) > 3 else 50
-    round_override = int(sys.argv[4]) if len(sys.argv) > 4 else None
 
     from pyspark.sql import SparkSession
 
@@ -65,8 +47,7 @@ def main() -> int:
     )
 
     qs, osql = e.queries(), e.oracle_sql()
-    ordered = _keys_for_round(round_override) if round_override is not None else list(qs)
-    sample = ordered[:n_keys]
+    sample = list(qs)[:n_keys]
     con = duckdb_connection(sf_dir)
     results: dict[str, dict] = {}
     fails = 0
