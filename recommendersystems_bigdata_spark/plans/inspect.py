@@ -2,9 +2,8 @@
 
 Used by tests/test_plans.py and tests/test_bucketing.py to assert the
 properties that decide 100 TB viability (pushdown, pruning, broadcast,
-partial aggregation, codegen, Arrow boundaries), and by the report CLI
-(``python -m recommendersystems_bigdata_spark.plans.report``) to dump a
-per-query plan summary for review.
+partial aggregation, codegen, Arrow boundaries), and by scripts/profile.py
+to summarize each key's final plan.
 """
 
 from __future__ import annotations

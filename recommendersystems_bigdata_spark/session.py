@@ -20,7 +20,7 @@ from pyspark.sql import SparkSession
 # cardinality at executor memory; RocksDB keeps state off-heap on local
 # disk with incremental checkpointing — the 100 TB-cardinality choice
 # (SCALE.md §2 streaming). It is a per-query SQL conf read at stream
-# start, so it can also be flipped at runtime via
+# start: a deployment selects it with
 # ``spark.conf.set(ROCKSDB_PROVIDER_CONF, ROCKSDB_PROVIDER_CLASS)``.
 ROCKSDB_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 ROCKSDB_PROVIDER_CLASS = (
@@ -32,16 +32,12 @@ def get_spark(
     app_name: str = "recommendersystems_bigdata_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    rocksdb_state_store: bool = False,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's tuned defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
     ``shuffle_partitions`` defaults to the core count — at the test scale
     factors a 200-way shuffle is pure overhead; AQE coalesces further.
-    ``rocksdb_state_store=True`` (or env ``SPARK_GRAFT_ROCKSDB_STATE=1``)
-    selects the RocksDB streaming state-store provider — the setting a
-    high-key-cardinality stateful deployment runs with.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
@@ -49,7 +45,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cpus == "*" else max(8, int(cpus))
 
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -60,7 +56,5 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    if rocksdb_state_store or os.environ.get("SPARK_GRAFT_ROCKSDB_STATE") == "1":
-        builder = builder.config(ROCKSDB_PROVIDER_CONF, ROCKSDB_PROVIDER_CLASS)
-    return builder.getOrCreate()

@@ -22,7 +22,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from recommendersystems_bigdata_spark.tmpdirs import scratch_dir
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -50,21 +49,19 @@ N_STREAM_CHUNKS = 4
 # micro-batch, and the default HDFS-backed provider writes + fsyncs a delta
 # file per store per batch, so the per-batch fixed cost is linear in the
 # partition count REGARDLESS of data. Measured at sf0.1
-# (scripts/stream_profile.py): state-store commit time dominates addBatch
-# while total state is 40–50k rows, and a default 200-partition session pays
-# 200 store commits × batches × (up to 4 stores for a stream-stream join) to
-# manage kilobytes. stream_state_partitions() therefore sizes state
-# partitions from the bytes that will actually stream through: chunked-source
-# bytes / 32 MB, at least 1 (every shipped corpus derives 1), growing without
-# bound with the corpus. Each query passes that count to run_to_memory, which
-# drains under min(session shuffle partitions, count): the session value
-# caps it, and so caps the STREAM_SHUFFLE_ENV override as well — the env var
-# can lower the state-partition count below the session's, never raise it
-# above. Partition COUNT is invisible to results: rows hash to stores by
-# key, and within-key arrival order (which decides keep-first dedup) rides
-# the per-batch single-file map order, not the reducer count — pinned by
-# the oracle/hash checks either way.
-STREAM_SHUFFLE_ENV = "SPARK_GRAFT_STREAM_SHUFFLE"
+# (scripts/profile.py 'q_stream_*'): state-store commit time dominates
+# addBatch while total state is 40–50k rows, and a default 200-partition
+# session pays 200 store commits × batches × (up to 4 stores for a
+# stream-stream join) to manage kilobytes. stream_state_partitions()
+# therefore sizes state partitions from the bytes that will actually stream
+# through: chunked-source bytes / 32 MB, at least 1 (every shipped corpus
+# derives 1), growing without bound with the corpus. Each query passes that
+# count to run_to_memory, which drains under min(session shuffle
+# partitions, count): the session value caps it. Partition COUNT is
+# invisible to results: rows hash to stores by key, and within-key arrival
+# order (which decides keep-first dedup) rides the per-batch single-file map
+# order, not the reducer count — pinned by the oracle/hash checks either
+# way.
 _STREAM_STATE_BYTES_PER_PARTITION = 32 * 1024 * 1024
 
 
@@ -147,19 +144,16 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     """State-partition count for draining the events stream of ``sf_dir``:
-    the STREAM_SHUFFLE_ENV override, else ceil(chunked-source bytes / 32 MB),
-    at least 1 (see the note above STREAM_SHUFFLE_ENV)."""
-    env = os.environ.get(STREAM_SHUFFLE_ENV)
-    if env:
-        return int(env)
+    ceil(chunked-source bytes / 32 MB), at least 1 (see the note above
+    _STREAM_STATE_BYTES_PER_PARTITION)."""
     src, _schema = _chunked_events_dir(spark, sf_dir)
     total_bytes = sum(os.path.getsize(p) for p in _glob.glob(os.path.join(src, "part-*")))
     return max(1, -(-total_bytes // _STREAM_STATE_BYTES_PER_PARTITION))
 
 
-def drain_to_memory(stream_df: DataFrame, output_mode: str, partitions: int) -> StreamingQuery:
+def run_to_memory(stream_df: DataFrame, output_mode: str, partitions: int) -> DataFrame:
     """Drain a stream into a memory sink with availableNow; return the
-    finished query (its ``name`` is the sink's table).
+    sink's table.
 
     State partitioning: `spark.sql.shuffle.partitions` is captured by a
     streaming query at start and becomes its state-store partition count
@@ -167,7 +161,7 @@ def drain_to_memory(stream_df: DataFrame, output_mode: str, partitions: int) -> 
     — normally stream_state_partitions()) and restores the session conf
     immediately after: never raising it above what the session chose, only
     refusing to spread kilobytes of state over hundreds of per-batch store
-    commits (see the STREAM_SHUFFLE_ENV note above)."""
+    commits (see the note above _STREAM_STATE_BYTES_PER_PARTITION)."""
     spark = stream_df.sparkSession
     name = "mem_" + uuid.uuid4().hex[:12]
     ckpt = scratch_dir("ckpt_" + name)
@@ -189,13 +183,7 @@ def drain_to_memory(stream_df: DataFrame, output_mode: str, partitions: int) -> 
     finally:
         if n != session_n:
             spark.conf.set(conf_key, str(session_n))
-    return q
-
-
-def run_to_memory(stream_df: DataFrame, output_mode: str, partitions: int) -> DataFrame:
-    """Drain a stream into a memory sink (drain_to_memory); return the result."""
-    q = drain_to_memory(stream_df, output_mode, partitions)
-    return stream_df.sparkSession.table(q.name)
+    return spark.table(name)
 
 
 @query(

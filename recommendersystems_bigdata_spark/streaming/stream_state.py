@@ -1,6 +1,5 @@
 """Custom stateful milestone streaming operator (SURVEY.md §2.I i13,
-round 9) — transformWithStateInPandas where available, with the
-applyInPandasWithState spelling as the portable fallback.
+round 9) on applyInPandasWithState.
 
 The operator is milestone emission: every user's running lifetime event
 count, persisted across micro-batches in per-user state, emitting one
@@ -14,16 +13,6 @@ sorts within each batch by the same key, the emitted set is a pure
 function of the data: exactly the rows batch SQL selects with
 ``row_number() % 10 = 0`` — so this genuinely stateful operator is
 hash-verified against a DuckDB oracle, not rows-only.
-
-API seam, adjudicated like the multimodal decoder: Spark 4's
-transformWithState is the successor API (named, individually-evolvable
-RocksDB state variables; timers; decoupled emission), but its Python
-side hard-requires ``google.protobuf`` for the state-server RPC, which
-this container does not ship. The query PROBES for protobuf and uses
-transformWithStateInPandas when importable; otherwise it runs the same
-milestone kernel through applyInPandasWithState (one state tuple, same
-semantics, same oracle). Both paths share the sort-count-emit kernel so
-the fallback can never drift from the TWS spelling.
 """
 
 from __future__ import annotations
@@ -40,17 +29,6 @@ from recommendersystems_bigdata_spark.streaming.stream_queries import (
 
 _EVERY_N = 10
 _OUT_SCHEMA = "user_id BIGINT, milestone_n BIGINT, ts TIMESTAMP"
-
-
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs google.protobuf for its Python
-    state-server; absent that, the API crashes the runner at init."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 @query(
@@ -80,25 +58,16 @@ def q_stream_tws_milestones(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batches, are sorted by the harness's (ts, event_id) total
     order, and counted in one pass — O(rows) work, O(users) state, no
     shuffle beyond the groupBy key exchange every stateful operator
-    needs. The RocksDB provider is set per-query because the driver's
-    default session does not carry the engine's tuned conf.
-
-    Uses transformWithStateInPandas when google.protobuf is importable
-    (see module docstring); this container lacks protobuf, so the
-    committed evidence exercises the applyInPandasWithState path — the
-    kernel and oracle are identical for both.
+    needs. It runs on the session's state-store provider and leaves the
+    session's conf as it found it.
     """
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     ev = read_events_stream(spark, sf_dir).select("user_id", "event_id", "ts")
     every_n = _EVERY_N
 
     def kernel(n0, pdf_iter):
-        # Shared by both API spellings; NESTED so cloudpickle ships it by
-        # value (a module-level fn pickles by reference and dies on
-        # workers without this package on sys.path).
+        # NESTED so cloudpickle ships it by value (a module-level fn
+        # pickles by reference and dies on workers without this package
+        # on sys.path).
         import pandas as pd
 
         frames = [p for p in pdf_iter if len(p)]
@@ -114,62 +83,28 @@ def q_stream_tws_milestones(spark: SparkSession, sf_dir: str) -> DataFrame:
                     hit_ts.append(ts)
         return n, hit_n, hit_ts
 
-    if _tws_available():  # pragma: no cover - container lacks protobuf
-        from pyspark.sql.streaming import StatefulProcessor
+    def emit_milestones(key, pdf_iter, state):
+        import pandas as pd
 
-        class MilestoneProcessor(StatefulProcessor):
-            def init(self, handle) -> None:
-                self._cnt = handle.getValueState("cnt", "n BIGINT")
+        n0 = state.get[0] if state.exists else 0
+        n, hit_n, hit_ts = kernel(int(n0), pdf_iter)
+        state.update((n,))
+        if hit_n:
+            yield pd.DataFrame(
+                {
+                    "user_id": [int(key[0])] * len(hit_n),
+                    "milestone_n": hit_n,
+                    "ts": hit_ts,
+                }
+            )
 
-            def handleInputRows(self, key, rows, timerValues):
-                import pandas as pd
-
-                prev = self._cnt.get()
-                n0 = int(prev[0]) if prev is not None else 0
-                n, hit_n, hit_ts = kernel(n0, rows)
-                self._cnt.update((n,))
-                if hit_n:
-                    yield pd.DataFrame(
-                        {
-                            "user_id": [int(key[0])] * len(hit_n),
-                            "milestone_n": hit_n,
-                            "ts": hit_ts,
-                        }
-                    )
-
-            def close(self) -> None:
-                pass
-
-        milestones = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=MilestoneProcessor(),
-            outputStructType=_OUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    else:
-
-        def emit_milestones(key, pdf_iter, state):
-            import pandas as pd
-
-            n0 = state.get[0] if state.exists else 0
-            n, hit_n, hit_ts = kernel(int(n0), pdf_iter)
-            state.update((n,))
-            if hit_n:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [int(key[0])] * len(hit_n),
-                        "milestone_n": hit_n,
-                        "ts": hit_ts,
-                    }
-                )
-
-        milestones = ev.groupBy("user_id").applyInPandasWithState(
-            emit_milestones,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType="n BIGINT",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    milestones = ev.groupBy("user_id").applyInPandasWithState(
+        emit_milestones,
+        outputStructType=_OUT_SCHEMA,
+        stateStructType="n BIGINT",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
     drained = run_to_memory(milestones, "append", stream_state_partitions(spark, sf_dir))
     return drained.select("user_id", "milestone_n", "ts").orderBy(

@@ -1,8 +1,10 @@
 """Build the FK-preserving K× replica of a test-SF corpus (SCALE.md §4).
 
-Each copy c in 0..K-1 offsets every key space by c × (a round power of
-ten above the base table's max key) so foreign keys stay consistent
-within a copy and copies are disjoint; every non-key attribute (texts,
+Each copy c in 0..K-1 offsets every key space by c × the space's unit:
+the next power of ten above the largest key any column of that space
+holds in the source (keys are non-negative). Every column of a space
+takes the same unit, so foreign keys stay consistent within a copy and
+copies are disjoint at any source scale; every non-key attribute (texts,
 vectors, timestamps, prices) is carried VERBATIM so per-row work is
 unchanged and only volume grows. Dimension tables (region, nation) and
 the nation/region foreign keys are NOT offset — exactly how a bigger
@@ -31,24 +33,35 @@ from pyspark.sql import functions as F  # noqa: E402
 from recommendersystems_bigdata_spark.catalog import load_table  # noqa: E402
 from recommendersystems_bigdata_spark.session import get_spark  # noqa: E402
 
-# table -> {column: offset unit}. The unit is a round power of ten above
-# the sf0.1 key range so copies never collide (and stays correct for
-# smaller source SFs).
-OFFSETS = {
-    "customer": {"c_custkey": 1_000_000},
-    "supplier": {"s_suppkey": 1_000_000},
-    "part": {"p_partkey": 1_000_000},
-    "orders": {"o_orderkey": 10_000_000, "o_custkey": 1_000_000},
-    "lineitem": {
-        "l_orderkey": 10_000_000,
-        "l_partkey": 1_000_000,
-        "l_suppkey": 1_000_000,
-    },
-    "events": {"event_id": 10_000_000, "user_id": 1_000_000},
-    "documents": {"doc_id": 1_000_000},
-    "embeddings": {"vec_id": 1_000_000},
+# Key space -> every (table, column) holding its keys. events.user_id joins
+# customer and embeddings.vec_id joins documents, so each shares its
+# parent's space.
+KEY_SPACES = {
+    "custkey": (("customer", "c_custkey"), ("orders", "o_custkey"), ("events", "user_id")),
+    "suppkey": (("supplier", "s_suppkey"), ("lineitem", "l_suppkey")),
+    "partkey": (("part", "p_partkey"), ("lineitem", "l_partkey")),
+    "orderkey": (("orders", "o_orderkey"), ("lineitem", "l_orderkey")),
+    "event_id": (("events", "event_id"),),
+    "doc_id": (("documents", "doc_id"), ("embeddings", "vec_id")),
 }
 VERBATIM = ("region", "nation")
+
+
+def offset_unit(max_key: int) -> int:
+    """The smallest power of ten above ``max_key``."""
+    unit = 1
+    while unit <= max_key:
+        unit *= 10
+    return unit
+
+
+def table_offsets(space_max: dict[str, int]) -> dict[str, dict[str, int]]:
+    """table -> {column: offset unit}, from each key space's max key."""
+    offsets: dict[str, dict[str, int]] = {}
+    for space, columns in KEY_SPACES.items():
+        for table, col in columns:
+            offsets.setdefault(table, {})[col] = offset_unit(space_max[space])
+    return offsets
 
 
 def main() -> None:
@@ -63,7 +76,13 @@ def main() -> None:
             os.path.join(out_dir, f"{t}.parquet")
         )
         print(f"{t}: verbatim")
-    for t, offs in OFFSETS.items():
+    space_max = {
+        space: max(
+            load_table(spark, src, t).agg(F.max(col)).first()[0] or 0 for t, col in columns
+        )
+        for space, columns in KEY_SPACES.items()
+    }
+    for t, offs in table_offsets(space_max).items():
         base = load_table(spark, src, t)
         copies = base.crossJoin(
             spark.range(k).select(F.col("id").alias("_copy"))

@@ -358,14 +358,13 @@ def test_stream_result_invariant_to_chunk_count(spark, sf_dir, key):
 @pytest.mark.parametrize(
     "key", ["q_stream_stateful_count", "q_stream_session_window"]
 )
-def test_stateful_queries_under_rocksdb_state_store(spark, sf_dir, key):
+def test_stateful_queries_under_rocksdb_provider(spark, sf_dir, key):
     """VERDICT r6 #3: the RocksDB state-store provider (the 100 TB-key-
     cardinality configuration — off-heap disk-backed state, incremental
-    checkpoints; session.py exposes it via ``rocksdb_state_store=True`` /
-    ``SPARK_GRAFT_ROCKSDB_STATE=1``) must produce the IDENTICAL emitted
-    set as the default HDFS-backed store. The provider conf is read per
-    streaming query at start, so flipping it at runtime on the shared
-    session exercises the same code path ``get_spark`` configures."""
+    checkpoints; session.py names its conf and class) must produce the
+    IDENTICAL emitted set as the default HDFS-backed store. The provider
+    conf is read per streaming query at start, so flipping it at runtime
+    on the shared session is how a deployment selects it."""
     from recommendersystems_bigdata_spark import registry
     from recommendersystems_bigdata_spark.session import (
         ROCKSDB_PROVIDER_CLASS,
@@ -395,3 +394,18 @@ def test_stateful_queries_under_rocksdb_state_store(spark, sf_dir, key):
         f"{key}: RocksDB state store changed the emitted set "
         f"({len(baseline)} vs {len(under_rocksdb)} rows)"
     )
+
+
+def test_milestones_leave_the_state_store_provider_unchanged(spark, sf_dir):
+    """q_stream_tws_milestones runs on the session's state-store provider
+    and must not switch it: a provider set by one query would carry every
+    later stateful stream in the session (and the RocksDB-vs-default test
+    above would compare RocksDB with RocksDB)."""
+    from recommendersystems_bigdata_spark import registry
+    from recommendersystems_bigdata_spark.session import ROCKSDB_PROVIDER_CONF
+
+    registry.load_all()
+    spark.conf.unset(ROCKSDB_PROVIDER_CONF)  # start from the default provider
+    before = spark.conf.get(ROCKSDB_PROVIDER_CONF, None)
+    assert registry.QUERIES["q_stream_tws_milestones"](spark, sf_dir).count() > 0
+    assert spark.conf.get(ROCKSDB_PROVIDER_CONF, None) == before
